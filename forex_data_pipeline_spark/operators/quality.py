@@ -3,7 +3,8 @@
 The reference declares `unique` / `not_null` / `accepted_values` tests in
 /root/reference/models/marts/marts_eurusd.yml:1-21; dbt compiles each to
 "SELECT violating rows; pass iff empty". These helpers produce the same
-violation DataFrames; ``run_checks`` evaluates them.
+violation DataFrames; ``observed_quality`` computes the scan-local ones
+as metrics of another action.
 
 Scale: `unique` is one hash-agg shuffle on the key; `not_null` and
 `accepted_values` are scan-local filters (pushed to parquet).
@@ -37,12 +38,6 @@ def accepted_values_violations(
     """Q3: rows whose ``col`` is outside the accepted set
     (marts_eurusd.yml:11-14)."""
     return df.filter(~F.col(col).isin(list(values)) | F.col(col).isNull())
-
-
-def run_checks(checks: dict[str, DataFrame]) -> dict[str, int]:
-    """Evaluate violation DataFrames → {check_name: violation_count}.
-    All-zero means the contract holds."""
-    return {name: df.count() for name, df in checks.items()}
 
 
 def observed_quality(

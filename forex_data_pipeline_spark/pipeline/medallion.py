@@ -8,18 +8,22 @@ Reference parity, generalized (SURVEY §3, §7 Phase 2):
 - **silver** (stg_eurusd.sql:14-42): typed projection (P1), incremental
   high-watermark filter (P3), QUALIFY-style dedup on the event key (D2),
   audit timestamp (P6), MERGE upsert on the key (S9).
-- **gold** (fct_eurusd_timeframes.sql:15-86): N-day lookback reprocess
-  (P4), multi-timeframe candles (T1-T4/U1/A1-A6), window indicators
-  (W2-W4), md5 surrogate key (F1-F3), MERGE on unique_id.
-- **checks**: Q1-Q3 dbt-test equivalents over gold.
+- **gold** (fct_eurusd_timeframes.sql:15-86): incremental reprocess
+  from gold's own watermark (P4), multi-timeframe candles
+  (T1-T4/U1/A1-A6), window indicators (W2-W4), md5 surrogate key
+  (F1-F3), MERGE on unique_id.
+- **checks**: Q1-Q3 dbt-test equivalents over gold, in one action.
 
-Parameterized by (symbol, timeframes, lookback) instead of the
+Parameterized by (symbol, timeframes, sma windows) instead of the
 reference's hard-coded EUR/USD — one code path serves any series.
 
-Incremental-correctness contract (SURVEY §7 hard-part 2): the gold
-lookback must cover ``max(sma window) × max(timeframe)`` so window
-indicators are recomputed with full history at the merge seam; the
-reference's 60-day lookback encodes exactly that for SMA-50 × 24 h.
+Incremental-correctness contract (SURVEY §7 hard-part 2): window
+indicators at the merge seam must see full history. The reference buys
+that with a 60-day lookback (``max(sma window) × max(timeframe)`` for
+SMA-50 × 24 h) and re-aggregates the whole tail every run; here the
+history is read back from the gold table as already-final candles, so
+a day re-aggregates only the buckets it can have changed (``gold_run``).
+A day's cost follows the new day, not the table's history.
 """
 
 from __future__ import annotations
@@ -28,23 +32,25 @@ from collections.abc import Sequence
 from dataclasses import dataclass, field
 from datetime import timedelta
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.candles import (
     REFERENCE_TIMEFRAMES,
     Timeframe,
+    bucket_epoch,
+    epoch_seconds,
     multi_timeframe_ohlc,
 )
 from ..operators.dedup import keyed_latest
 from ..operators.indicators import with_indicators
-from ..operators.quality import (
-    accepted_values_violations,
-    not_null_violations,
-    run_checks,
-    unique_violations,
+from ..operators.quality import observed_quality, unique_violations
+from ..sources.writers import (
+    high_watermark,
+    merge_upsert,
+    read_table,
+    write_partitioned,
 )
-from ..sources.writers import high_watermark, merge_upsert, write_partitioned
 
 
 @dataclass
@@ -52,7 +58,6 @@ class PipelineConfig:
     base_dir: str
     symbol: str = "EUR/USD"
     timeframes: Sequence[Timeframe] = field(default=REFERENCE_TIMEFRAMES)
-    lookback_days: int = 60  # fct:28
     sma_windows: Sequence[int] = (20, 50)
 
     @property
@@ -106,10 +111,11 @@ def silver_transform(bronze: DataFrame, watermark=None) -> DataFrame:
 
 def silver_run(spark: SparkSession, cfg: PipelineConfig) -> None:
     bronze = spark.read.parquet(cfg.bronze_path)
-    wm = high_watermark(spark, cfg.silver_path, "observed_at")
-    batch = silver_transform(bronze, wm)
+    silver = read_table(spark, cfg.silver_path)
+    batch = silver_transform(bronze, high_watermark(silver, "observed_at"))
     merge_upsert(
         spark, cfg.silver_path, batch, ["symbol", "observed_at"],
+        existing=silver,
     )
 
 
@@ -151,52 +157,63 @@ def gold_run(spark: SparkSession, cfg: PipelineConfig) -> None:
     slices candles mid-bucket, so the edge candle is re-aggregated from
     partial ticks and overwrites a complete one; (b) SMA windows at the
     head of the recomputed tail are truncated, overwriting correct old
-    values. Both are fixed here:
+    values. It also pays for 60 days to land one.
+
+    Here the recompute starts at gold's own watermark ``wm`` (its
+    latest candle_start). Silver admits only rows newer than its own
+    watermark (P3), which is never behind gold's, so every candle that
+    ends at or before ``wm`` is final: no row that could change it
+    arrives any more. Each seam defect is fixed:
 
     1. Recompute candles only from each timeframe's OWN boundary at/below
-       the cutoff (per-tf snap — no partial aggregates; with mixed clock
+       ``wm`` (per-tf snap — no partial aggregates; with mixed clock
        shifts no single instant is a boundary for every timeframe).
-    2. Take indicator *context* (the max(sma)−1 candles before each
-       timeframe's edge) from the EXISTING gold table — those candles
-       are final, so re-reading them is both exact and far cheaper than
-       re-aggregating weeks of silver: the silver scan shrinks to
-       ~lookback + one coarsest bucket, and window history costs one
-       pruned read of an already-materialized table. At 100 TB this is
-       the difference between scanning days and scanning months.
+    2. Take indicator *context* — the candles of the max(sma) buckets
+       before each timeframe's edge, i.e. the max(sma) preceding
+       candles of a series with no empty bucket there — from the
+       EXISTING gold table. Those candles are final, so re-reading them
+       is exact and costs one pruned read of an already-materialized
+       table instead of weeks of silver.
     3. Indicators are computed over context ∪ recomputed, then only
        rows at/after the merge edge are upserted.
+
+    A day thus re-aggregates about one coarsest bucket of silver,
+    whatever the history length. The gold table is read once: the
+    watermark, the context and the merge share the frame.
     """
     silver = spark.read.parquet(cfg.silver_path)
-    wm = high_watermark(spark, cfg.gold_path, "candle_start")
+    gold = read_table(spark, cfg.gold_path)
+    wm = high_watermark(gold, "candle_start")
     if wm is None:
         merge_upsert(
             spark, cfg.gold_path, gold_transform(cfg, silver), ["unique_id"],
             sort_within=("timeframe", "candle_start"),  # cluster_by, fct:11
+            existing=gold,
         )
         return
 
-    cutoff = wm - timedelta(days=cfg.lookback_days)            # P4, fct:28
     sma_max = max(cfg.sma_windows)
     max_dur = max(tf.seconds for tf in cfg.timeframes)
     max_shift = max(tf.shift_seconds for tf in cfg.timeframes)
 
     # Coarse driver-side prefilter → parquet row-group/partition pruning;
     # the per-tf exploded filter inside multi_timeframe_ohlc is exact.
-    scan_lo = cutoff - timedelta(seconds=max_dur + max_shift)
+    scan_lo = wm - timedelta(seconds=max_dur + max_shift)
     recomputed = multi_timeframe_ohlc(
         silver.filter(F.col("observed_at") >= F.lit(scan_lo)),
         "observed_at", "close_price", ["symbol"],
         timeframes=cfg.timeframes,
-        min_candle_start=cutoff,
+        min_candle_start=wm,
         keep_spec=True,
     )
 
-    spec = _tf_spec_df(spark, cfg)
-    existing = spark.read.parquet(cfg.gold_path).join(
-        F.broadcast(spec), "timeframe"
-    )
-    edge = _edge_epoch(cutoff)
-    cs_epoch = F.unix_timestamp(F.col("candle_start").cast("timestamp"))
+    existing = gold.withColumns({
+        "dur_s": _tf_lookup(cfg, "seconds"),
+        "shift_s": _tf_lookup(cfg, "shift_seconds"),
+    })
+    # each row's own timeframe bucket of wm: the per-tf merge edge
+    edge = bucket_epoch(F.lit(wm), F.col("dur_s"), F.col("shift_s"))
+    cs_epoch = epoch_seconds(F.col("candle_start"))
     context = existing.filter(
         (cs_epoch < edge) & (cs_epoch >= edge - sma_max * F.col("dur_s"))
     ).select(
@@ -213,40 +230,35 @@ def gold_run(spark: SparkSession, cfg: PipelineConfig) -> None:
     merge_upsert(
         spark, cfg.gold_path, _finalize_gold(to_merge), ["unique_id"],
         sort_within=("timeframe", "candle_start"),      # cluster_by, fct:11
+        existing=gold,
     )
 
 
-def _tf_spec_df(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
-    return spark.createDataFrame(
-        [(tf.name, tf.seconds, tf.shift_seconds) for tf in cfg.timeframes],
-        "timeframe string, dur_s int, shift_s int",
-    )
-
-
-def _edge_epoch(cutoff):
-    """Per-timeframe merge edge as a Column expression factory: the
-    bucket of ``cutoff`` in each row's own (dur_s, shift_s)."""
-    cut = F.unix_timestamp(F.lit(cutoff).cast("timestamp"))
-    return (
-        F.floor((cut + F.col("shift_s")) / F.col("dur_s")) * F.col("dur_s")
-        - F.col("shift_s")
-    ).cast("long")
+def _tf_lookup(cfg: PipelineConfig, attr: str) -> Column:
+    """A ``Timeframe`` attribute of each row's ``timeframe``, as a
+    literal map lookup (NULL for a timeframe outside ``cfg``)."""
+    return F.create_map(*[
+        F.lit(v) for tf in cfg.timeframes for v in (tf.name, getattr(tf, attr))
+    ])[F.col("timeframe")]
 
 
 def gold_checks(spark: SparkSession, cfg: PipelineConfig) -> dict[str, int]:
-    """Q1-Q3 (marts_eurusd.yml:1-21) over the materialized gold table."""
-    gold = spark.read.parquet(cfg.gold_path)
-    tf_names = [tf.name for tf in cfg.timeframes]
-    return run_checks(
-        {
-            "unique__unique_id": unique_violations(gold, ["unique_id"]),
-            "not_null__unique_id": not_null_violations(gold, "unique_id"),
-            "not_null__candle_start": not_null_violations(gold, "candle_start"),
-            "accepted_values__timeframe": accepted_values_violations(
-                gold, "timeframe", tf_names
-            ),
-        }
+    """Q1-Q3 (marts_eurusd.yml:1-21) over the materialized gold table,
+    in one action: the not_null and accepted_values counts are observed
+    metrics that ride the unique check's count."""
+    gold, obs = observed_quality(
+        spark.read.parquet(cfg.gold_path),
+        not_null_cols=("unique_id", "candle_start"),
+        accepted={"timeframe": [tf.name for tf in cfg.timeframes]},
     )
+    dupes = unique_violations(gold, ["unique_id"]).count()
+    got = obs.get
+    return {
+        "unique__unique_id": dupes,
+        "not_null__unique_id": got["nulls_unique_id"],
+        "not_null__candle_start": got["nulls_candle_start"],
+        "accepted_values__timeframe": got["rejected_timeframe"],
+    }
 
 
 def run_batch(

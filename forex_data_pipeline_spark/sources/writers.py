@@ -7,12 +7,12 @@ The reference gets MERGE for free from BigQuery
 ``incremental_strategy='merge'`` on a ``unique_key``, day-partitioned).
 Pure-Spark equivalent, two strategies:
 
-- ``rewrite``  — read existing → anti-join on keys → union new → write to
-  a temp dir → atomic swap. Correct everywhere; rewrites the whole
-  table, so only for small/medium tables.
+- ``rewrite``  — write new to a temp dir → append the existing rows
+  anti-joined on its keys → atomic swap. Correct everywhere; rewrites
+  the whole table, so only for small/medium tables.
 - ``dynamic``  — dynamic partition overwrite: only partitions touched by
   the new batch are read, anti-joined, and overwritten
-  (``spark.sql.sources.partitionOverwriteMode=dynamic``). This is the
+  (the per-write ``partitionOverwriteMode=dynamic`` option). This is the
   100 TB path: cost ∝ touched partitions (a daily batch touches 1-2 day
   partitions), not table size — exactly the reference's day-partitioned
   MERGE cost model.
@@ -31,6 +31,7 @@ import shutil
 import uuid
 from collections.abc import Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -62,12 +63,22 @@ def write_partitioned(
     w.parquet(path)
 
 
-def table_exists(spark: SparkSession, path: str) -> bool:
+def read_table(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table at ``path``, or None when it is absent or empty.
+
+    Resolving a table lists its files and runs a schema-inference job,
+    so a phase that needs a table several times (watermark, context,
+    merge) reads it once here and passes the frame on."""
     try:
-        spark.read.parquet(path).schema
-        return True
-    except Exception:  # noqa: BLE001 - missing path / empty dir
-        return False
+        df = spark.read.parquet(path)
+        df.schema  # noqa: B018 - resolve now: a missing path raises here
+    except AnalysisException:  # PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA
+        return None
+    return df
+
+
+#: ``merge_upsert``'s default for ``existing``: read the table itself.
+_READ = object()
 
 
 def merge_upsert(
@@ -79,19 +90,30 @@ def merge_upsert(
     partition_cols: Sequence[str] = (),
     strategy: str = "rewrite",
     sort_within: Sequence[str] = (),
+    existing=_READ,
 ) -> None:
     """S9 MERGE: upsert ``new_df`` into the parquet table at ``path`` on
     ``keys`` — new rows win, untouched rows are preserved.
 
     Equivalent to ``MERGE INTO path USING new_df ON keys WHEN MATCHED
     UPDATE ALL WHEN NOT MATCHED INSERT ALL``.
+
+    ``existing`` is the table at ``path`` when the caller has already
+    read it with ``read_table`` (None = absent); by default it is read
+    here.
+
+    The rewrite strategy evaluates ``new_df`` exactly once: the batch
+    is written into the temp dir first, the old rows whose keys are not
+    among the keys read back from those files are appended after it,
+    and the dir is swapped in. Anti-joining against ``new_df`` itself
+    would run the batch's whole plan a second time.
     """
     keys = list(keys)
-    if not table_exists(spark, path):
+    if existing is _READ:
+        existing = read_table(spark, path)
+    if existing is None:
         write_partitioned(new_df, path, partition_cols, sort_within=sort_within)
         return
-
-    existing = spark.read.parquet(path)
 
     if strategy == "dynamic" and partition_cols:
         # Scale path: touch only the partitions present in the new batch.
@@ -101,31 +123,42 @@ def merge_upsert(
         result = kept.unionByName(new_df.select(*kept.columns))
         if sort_within:
             result = result.sortWithinPartitions(*sort_within)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # 'overwrite' + dynamic mode replaces only partitions present in
-        # `result` — everything else on disk is untouched.
-        result.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
+        # `result` — everything else on disk is untouched. Set per write:
+        # the session conf would leak into concurrent writers.
+        (
+            result.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*partition_cols)
+            .parquet(path)
+        )
         return
 
-    kept = existing.join(new_df.select(*keys).distinct(), keys, "left_anti")
-    result = kept.unionByName(new_df.select(*kept.columns))
+    # keys first: the column order of the USING anti-join below, so the
+    # batch files and the appended old rows share one file schema
+    batch = new_df.select(*keys, *[c for c in existing.columns if c not in keys])
     tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
-    write_partitioned(result, tmp, partition_cols, sort_within=sort_within)
+    write_partitioned(batch, tmp, partition_cols, sort_within=sort_within)
+    landed = spark.read.schema(batch.schema).parquet(tmp).select(*keys)
+    write_partitioned(
+        existing.join(landed, keys, "left_anti"), tmp, partition_cols,
+        mode="append", sort_within=sort_within,
+    )
     old = f"{path}__old_{uuid.uuid4().hex[:8]}"
     os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old, ignore_errors=True)
 
 
-def high_watermark(
-    spark: SparkSession, path: str, col: str
-):
-    """P3: max(col) of an existing table, None when absent
+def high_watermark(table: DataFrame | None, col: str):
+    """P3: max(col) of a table read with ``read_table``, None when absent
     (stg_eurusd.sql:18-21). Collected on the driver so the incremental
-    filter becomes a pushable literal predicate."""
-    if not table_exists(spark, path):
+    filter becomes a pushable literal predicate. Taken as the top-1 row
+    (NULLs sort last) rather than ``max()``: one job, no exchange."""
+    if table is None:
         return None
-    return spark.read.parquet(path).agg(F.max(col)).first()[0]
+    top = table.select(col).orderBy(F.col(col).desc()).first()
+    return None if top is None else top[0]
 
 
 def write_bucketed(

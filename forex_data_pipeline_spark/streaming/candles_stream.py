@@ -54,7 +54,9 @@ def state_partitions_for(spark: SparkSession, *paths: str) -> int:
     to DATA, not cores: the count grows linearly with input and returns
     to the session default once the staged source reaches
     default × 32 MB, so a cluster-scale ingest keeps the operator's
-    configured width (nothing here is tuned to local[32])."""
+    configured width (nothing here is tuned to local[32]). When no path
+    resolves locally (a remote URI) the size is unknown and the count
+    is the session width, never a single state store."""
     total = 0
     for p in paths:
         if os.path.isdir(p):
@@ -68,7 +70,7 @@ def state_partitions_for(spark: SparkSession, *paths: str) -> int:
         cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         cap = spark.sparkContext.defaultParallelism
-    return max(1, min(cap, -(-total // _STATE_PARTITION_BYTES)))
+    return min(cap, -(-total // _STATE_PARTITION_BYTES)) if total else cap
 
 
 @contextmanager

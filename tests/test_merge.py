@@ -7,6 +7,7 @@ import pandas as pd
 from forex_data_pipeline_spark.sources.writers import (
     high_watermark,
     merge_upsert,
+    read_table,
     write_partitioned,
 )
 
@@ -63,6 +64,33 @@ def test_merge_rewrite_upserts(spark, tmp_path):
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
 
 
+def test_merge_rewrite_evaluates_batch_once(spark, tmp_path):
+    """The rewrite merge must run the batch's plan once: an accumulator
+    in a UDF inside the batch counts one evaluation per batch row, not
+    one per consumer (anti-join keys + union)."""
+    from pyspark.sql import functions as F
+
+    path = f"{tmp_path}/once"
+    merge_upsert(
+        spark, path,
+        spark.createDataFrame([(1, 10), (2, 20)], "k int, v int"), ["k"],
+    )
+    evals = spark.sparkContext.accumulator(0)
+
+    @F.udf("boolean")
+    def counted(_k):
+        evals.add(1)
+        return True
+
+    batch = spark.createDataFrame(
+        [(2, 99), (3, 30), (4, 40)], "k int, v int"
+    ).filter(counted("k"))
+    merge_upsert(spark, path, batch, ["k"])
+    assert evals.value == 3
+    got = _rows(spark, path)
+    assert list(zip(got.k, got.v)) == [(1, 10), (2, 99), (3, 30), (4, 40)]
+
+
 def test_merge_dynamic_touches_only_new_partitions(spark, tmp_path):
     path = f"{tmp_path}/p"
     base = spark.createDataFrame(
@@ -108,13 +136,31 @@ def test_merge_key_moving_partition_dynamic(spark, tmp_path):
     assert got.v.tolist() == [1, 22]
 
 
+def test_merge_dynamic_leaves_session_conf_alone(spark, tmp_path):
+    """Dynamic overwrite is a per-write option: a dynamic merge must not
+    flip the session's partitionOverwriteMode under other writers."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    path = f"{tmp_path}/d"
+    write_partitioned(
+        spark.createDataFrame([(1, "d1", 1), (2, "d2", 2)],
+                              "k int, day string, v int"),
+        path, ("day",),
+    )
+    batch = spark.createDataFrame([(2, "d2", 22)], "k int, day string, v int")
+    merge_upsert(spark, path, batch, ["k"], partition_cols=("day",),
+                 strategy="dynamic")
+    assert spark.conf.get(key) == "static"
+    assert _rows(spark, path).v.tolist() == [1, 22]  # d1 survived
+
+
 def test_high_watermark(spark, tmp_path):
     path = f"{tmp_path}/w"
-    assert high_watermark(spark, path, "v") is None
+    assert high_watermark(read_table(spark, path), "v") is None
     write_partitioned(
         spark.createDataFrame([(1, 5), (2, 9)], "k int, v int"), path
     )
-    assert high_watermark(spark, path, "v") == 9
+    assert high_watermark(read_table(spark, path), "v") == 9
 
 
 def test_sort_within_clusters_rows_for_rowgroup_skipping(spark, tmp_path):

@@ -48,11 +48,10 @@ def make_ticks(start: str, periods: int, dup_every: int = 50) -> pd.DataFrame:
     )
 
 
-def _cfg(tmp_path, name: str, lookback: int = 60) -> PipelineConfig:
+def _cfg(tmp_path, name: str) -> PipelineConfig:
     return PipelineConfig(
         base_dir=f"{tmp_path}/{name}",
         timeframes=TFS,
-        lookback_days=lookback,
         sma_windows=(20, 50),
     )
 
@@ -89,12 +88,12 @@ def test_full_pipeline_green(spark, tmp_path):
 def test_incremental_equals_full_recompute(spark, tmp_path):
     """Three daily batches with overlapping re-fetches (late duplicates)
     must converge to byte-identical silver+gold vs one full run."""
-    # lookback=1 day on an 8-day span forces genuine merge seams: the
-    # cutoff lands mid-candle for every timeframe and the SMA-50 window
-    # reaches far past it — both the per-tf boundary snap and the
-    # existing-gold context path must engage for equality to hold.
-    inc = _cfg(tmp_path, "inc", lookback=1)
-    full = _cfg(tmp_path, "fullr", lookback=1)
+    # gold recomputes from its own watermark, so each seam sits at the
+    # newest candle: it lands mid-candle for every coarser timeframe and
+    # the SMA-50 window reaches far past it — both the per-tf boundary
+    # snap and the existing-gold context path must engage for equality.
+    inc = _cfg(tmp_path, "inc")
+    full = _cfg(tmp_path, "fullr")
 
     # batches overlap by half a day — the high-watermark filter (P3)
     # must drop the re-fetched tail, the merge (S9) must never dup.
@@ -108,6 +107,42 @@ def test_incremental_equals_full_recompute(spark, tmp_path):
         spark, full,
         spark.createDataFrame(pd.concat([b1, b2, b3], ignore_index=True)),
     )
+
+    for path_attr, cols in (("silver_path", SILVER_COLS), ("gold_path", GOLD_COLS)):
+        got = _collect(spark, getattr(inc, path_attr), cols)
+        exp = _collect(spark, getattr(full, path_attr), cols)
+        pd.testing.assert_frame_equal(got, exp, check_like=True)
+
+
+def test_incremental_rest_days_equal_full_batch_default_config(
+    spark, tmp_path
+):
+    """A backfill and then three REST days through the seam path, with
+    the default config (7 reference timeframes, SMA 20/50), must equal
+    one full-batch run on every non-audit column of silver and gold."""
+    from datetime import datetime
+    from functools import reduce
+
+    from forex_data_pipeline_spark.cli import synthetic_transport
+    from forex_data_pipeline_spark.pipeline.medallion import run_daily
+    from forex_data_pipeline_spark.sources.rest import TimeSeriesRestSource
+
+    src = TimeSeriesRestSource(
+        transport=synthetic_transport, now=lambda: datetime(2024, 3, 20)
+    )
+    days = [f"2024-03-{d:02d}" for d in range(1, 9)]
+
+    def raw(ds):
+        return reduce(
+            lambda a, b: a.unionByName(b), [src.to_spark(spark, d) for d in ds]
+        )
+
+    inc = PipelineConfig(base_dir=f"{tmp_path}/inc")
+    full = PipelineConfig(base_dir=f"{tmp_path}/full")
+    run_batch(spark, inc, raw(days[:5]))  # backfill
+    for d in days[5:]:
+        assert not any(run_daily(spark, inc, src, d).values())
+    run_batch(spark, full, raw(days))
 
     for path_attr, cols in (("silver_path", SILVER_COLS), ("gold_path", GOLD_COLS)):
         got = _collect(spark, getattr(inc, path_attr), cols)
@@ -144,6 +179,53 @@ def test_quality_checks_catch_violations(spark, tmp_path):
     )
     assert unique_violations(bad, ["unique_id", "timeframe"]).count() == 1
     assert accepted_values_violations(bad, "timeframe", ["5m"]).count() == 1
+
+
+def test_gold_checks_one_pass_counts_match_single_purpose_helpers(
+    spark, tmp_path
+):
+    """gold_checks computes its four counts in one action; on a
+    hand-built bad gold table each must still report its violation kind
+    and equal the count of the matching single-purpose helper."""
+    from datetime import datetime
+
+    from forex_data_pipeline_spark.operators.quality import (
+        accepted_values_violations,
+        not_null_violations,
+        unique_violations,
+    )
+    from forex_data_pipeline_spark.pipeline.medallion import gold_checks
+
+    cfg = _cfg(tmp_path, "bad")
+    t = datetime(2024, 3, 1)
+    spark.createDataFrame(
+        [
+            ("a", "5m", t), ("a", "1h", t),                  # dup key
+            ("b", "5m", t), ("b", "1h", t), ("b", "24h", t),  # dup key
+            (None, "5m", t), (None, "1h", t),  # null keys (a dup group too)
+            ("c", "5m", None),                 # null candle_start
+            ("d", "99x", t), ("e", None, t),   # rejected timeframes
+        ],
+        "unique_id string, timeframe string, candle_start timestamp_ntz",
+    ).write.parquet(cfg.gold_path)
+
+    checks = gold_checks(spark, cfg)
+    gold = spark.read.parquet(cfg.gold_path)
+    assert checks == {
+        "unique__unique_id": unique_violations(gold, ["unique_id"]).count(),
+        "not_null__unique_id": not_null_violations(gold, "unique_id").count(),
+        "not_null__candle_start":
+            not_null_violations(gold, "candle_start").count(),
+        "accepted_values__timeframe": accepted_values_violations(
+            gold, "timeframe", [tf.name for tf in TFS]
+        ).count(),
+    }
+    assert checks == {
+        "unique__unique_id": 3,
+        "not_null__unique_id": 2,
+        "not_null__candle_start": 1,
+        "accepted_values__timeframe": 2,
+    }
 
 
 def test_run_daily_from_rest_source(spark, tmp_path):
@@ -264,7 +346,6 @@ def test_concurrent_two_symbols_overlap_and_match_sequential(
             base_dir=f"{tmp_path}/{prefix}/{symbol.replace('/', '_')}",
             symbol=symbol,
             timeframes=TFS,
-            lookback_days=60,
             sma_windows=(20, 50),
         )
         return cfg
