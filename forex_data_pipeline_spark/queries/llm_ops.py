@@ -37,7 +37,7 @@ from ..functions.text import (
     tokens_sql,
 )
 from ..functions.vector import cosine, cosine_sql, dot, dot_sql, norm
-from ..scratch import scratch_dir
+from ..scratch import scratch_dir, stage_hash_chunks
 from ..tables import load
 
 MINHASH_K = 8          # signature length
@@ -3226,84 +3226,60 @@ def _pq_subvectors(
 ) -> DataFrame:
     """(*id_cols, sub_idx, subvec) — m skinny slices per vector via ONE
     map-side explode (a union of m selects would scan the source m
-    times); total bytes equal the input."""
-    slices = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("sub_idx"),
-                F.slice(
-                    "embedding", j * _PQ_SUBDIM + 1, _PQ_SUBDIM
-                ).alias("subvec"),
-            )
-            for j in range(_PQ_M)
-        ]
+    times); total bytes equal the input. The m-struct array is one SQL
+    text, parsed once (built from Columns it is ~100 py4j calls)."""
+    slices = ", ".join(
+        f"named_struct('sub_idx', {j}, 'subvec', "
+        f"slice(embedding, {j * _PQ_SUBDIM + 1}, {_PQ_SUBDIM}))"
+        for j in range(_PQ_M)
     )
     return emb.select(
-        *id_cols, F.explode(slices).alias("s")
+        *id_cols, F.expr(f"explode(array({slices}))").alias("s")
     ).select(*id_cols, F.col("s.sub_idx"), F.col("s.subvec"))
 
 
-def _pq_assign(sub: DataFrame, books: DataFrame) -> DataFrame:
-    """Nearest-code assignment per (vec_id, sub_idx): broadcast the
-    m·k codebook, score map-side, argmin via min_by partial agg —
-    subvectors never ride a shuffle. The subspace distance is unrolled
-    over the constant subdim so it stays in whole-stage codegen."""
+def _pq_assign(
+    sub: DataFrame, books: DataFrame, value: "F.Column"
+) -> DataFrame:
+    """(vec_id, sub_idx, nearest): ``value`` (over code_id / subvec) of
+    each subvector's nearest code, ties to the lower code_id. The m·k
+    codebook is broadcast and scored map-side, the argmin is a min_by
+    partial agg — subvectors never ride a shuffle. The subspace
+    distance is unrolled over the constant subdim so it stays in
+    whole-stage codegen."""
     from ..functions.vector import l2sq_unrolled
 
     return (
         sub.join(F.broadcast(books), "sub_idx")
         .select(
-            "vec_id",
-            "sub_idx",
-            "code_id",
-            l2sq_unrolled(
-                F.col("subvec"), F.col("c_sub"), _PQ_SUBDIM
-            ).alias("d2"),
+            "vec_id", "sub_idx", "code_id", "subvec",
+            l2sq_unrolled("subvec", "c_sub", _PQ_SUBDIM).alias("d2"),
         )
         .groupBy("vec_id", "sub_idx")
         .agg(
-            F.min_by(
-                "code_id", F.struct(F.col("d2"), F.col("code_id"))
-            ).alias("code_id")
+            F.min_by(value, F.struct(F.col("d2"), F.col("code_id"))).alias(
+                "nearest"
+            )
         )
     )
 
 
-@register(
-    "ann_pq_topk",
-    # No oracle: multi-stage approximate algorithm (like ann_ivf_topk);
-    # recall vs exact L2 brute force is asserted in tests instead.
-    doc="Product-quantization ANN (the IVF-PQ second stage): embeddings "
-    f"split into {_PQ_M} orthogonal subspaces, each quantized to one of "
-    f"{_PQ_CODES} codebook entries (hash-picked seeds + one Lloyd "
-    "pass, per subspace) — a vector compresses 64 floats → "
-    f"{_PQ_M} 4-bit codes (8 bytes), and approximate distance is "
-    "computed WITHOUT touching embeddings: ADC joins each stored code "
-    f"against a per-query distance table of m·k={_PQ_M * _PQ_CODES} "
-    "precomputed cell distances (broadcast — constant size), then "
-    "sums the m terms per (query, vector). The ADC pass only builds a "
-    "50-deep shortlist; full-precision distances are then computed "
-    "for exactly those 50 vectors per query (the production "
-    "shortlist-and-re-rank pattern — measured recall@5 ≈ 0.8 on "
-    "uniform vectors, vs ≈ 0.3 for raw ADC ranking). All shuffles "
-    "carry only (id, sub, code, d2) skinny rows; codebook size is "
-    "data-independent, so the plan is unchanged at 100 TB where the "
-    "code table is 8 bytes/vector instead of 256.",
-    tags=("llm", "similarity", "topk"),
-)
-def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.vector import l2sq_unrolled
+def _pq_train(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(books, codes): per-subspace codebooks from hash-picked seeds
+    plus one Lloyd pass, and every vector's nearest-code assignment —
+    the one PQ training kernel of ann_pq_topk and ann_ivfpq_topk.
 
-    emb = load(spark, sf_dir, "embeddings")
-    # three consumers below (seed_assign, books, codes) — materialize
-    # once or each branch re-scans + re-explodes the source
-    sub = _pq_subvectors(emb).localCheckpoint(eager=True)
-    # Deterministic seed rows (shared across subspaces): the k vectors
-    # with smallest xxhash64(vec_id) — TakeOrderedAndProject, O(n).
-    # The seed codebook is sliced straight from the k surviving FULL
-    # vectors (identical F.slice values) instead of broadcast-joining
-    # the ids back against the corpus-sized subvector table — r11:
-    # one fewer full pass over `sub` per call.
+    Seeds: the k vectors with smallest xxhash64(vec_id)
+    (TakeOrderedAndProject, O(n)), sliced straight from the k surviving
+    full vectors. The seed assignment carries each subvector through
+    min_by, so the Lloyd step (code centroid <- mean of its assigned
+    subvectors) is one (sub_idx, code_id)-keyed partial agg with one
+    avg per dimension — no join back to the subvector table, no
+    per-dimension explode, output bounded at m·k rows. ``books`` is the
+    one materialized intermediate (m·k rows, read by encode and ADC);
+    the subvector table is re-derived per consumer from a map-side
+    explode of the scan."""
+    sub = _pq_subvectors(emb)
     seed_vecs = (
         emb.select("vec_id", "embedding")
         .orderBy(F.xxhash64(F.col("vec_id")), "vec_id")
@@ -3318,27 +3294,57 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed_books = _pq_subvectors(seed_vecs, id_cols=("code_id",)).select(
         "sub_idx", "code_id", F.col("subvec").alias("c_sub")
     )
-    # One Lloyd refinement per subspace: code centroid <- mean of its
-    # assigned subvectors; (sub, code, dim)-keyed partial agg, output
-    # bounded at m·k·subdim rows.
-    seed_assign = _pq_assign(sub, seed_books)
+    seed_assign = _pq_assign(sub, seed_books, F.struct("code_id", "subvec"))
+    means = ", ".join(
+        f"CAST(avg(nearest.subvec[{i}]) AS FLOAT)"
+        for i in range(_PQ_SUBDIM)
+    )
     books = (
-        sub.join(seed_assign, ["vec_id", "sub_idx"])
-        .select(
-            "sub_idx", "code_id", F.posexplode("subvec").alias("pos", "v")
+        seed_assign.groupBy(
+            "sub_idx", F.col("nearest.code_id").alias("code_id")
         )
-        .groupBy("sub_idx", "code_id", "pos")
-        .agg(F.avg("v").alias("m"))
-        .groupBy("sub_idx", "code_id")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("s"))
-        .select(
-            "sub_idx",
-            "code_id",
-            F.transform("s", lambda x: x.m.cast("float")).alias("c_sub"),
-        )
+        .agg(F.expr(f"array({means})").alias("c_sub"))
         .localCheckpoint(eager=True)  # m·k rows; reused by encode + ADC
     )
-    codes = _pq_assign(sub, books)
+    codes = _pq_assign(sub, books, F.col("code_id")).select(
+        "vec_id", "sub_idx", F.col("nearest").alias("code_id")
+    )
+    return books, codes
+
+
+@register(
+    "ann_pq_topk",
+    # No oracle: multi-stage approximate algorithm (like ann_ivf_topk);
+    # recall vs exact L2 brute force is asserted in tests instead.
+    doc="Product-quantization ANN (the IVF-PQ second stage): embeddings "
+    f"split into {_PQ_M} orthogonal subspaces, each quantized to one of "
+    f"{_PQ_CODES} codebook entries (hash-picked seeds + one Lloyd "
+    "pass, per subspace, trained by one fused kernel: the seed "
+    "assignment's min_by carries each subvector, so the centroid "
+    "update is a single (subspace, code)-keyed average — the m·k-row "
+    "codebook is the only materialized intermediate) — a vector "
+    f"compresses 64 floats → {_PQ_M} 4-bit codes (8 bytes), and "
+    "approximate distance is computed WITHOUT touching embeddings: ADC "
+    "joins each stored code against a per-query distance table of "
+    f"m·k={_PQ_M * _PQ_CODES} precomputed cell distances (broadcast — "
+    "constant size), then sums the m terms per (query, vector). The "
+    "ADC pass only builds a 50-deep shortlist; full-precision "
+    "distances are then computed for exactly those 50 vectors per "
+    "query (the production shortlist-and-re-rank pattern — measured "
+    "recall@5 ≈ 0.8 on uniform vectors, vs ≈ 0.3 for raw ADC "
+    "ranking). All shuffles carry only (id, sub, code, d2) skinny "
+    "rows; codebook size is data-independent, so the plan is unchanged "
+    "at 100 TB where the code table is 8 bytes/vector instead of 256. "
+    "Unrolled distances "
+    "and the subspace explode are generated SQL text (one parse each), "
+    "not per-term Column calls.",
+    tags=("llm", "similarity", "topk"),
+)
+def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.vector import l2sq_unrolled
+
+    emb = load(spark, sf_dir, "embeddings")
+    books, codes = _pq_train(emb)
 
     # ADC: per-query distance table against every codebook cell —
     # 10 queries × m·k cells, broadcastable by construction.
@@ -3354,9 +3360,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "sub_idx",
             "code_id",
-            l2sq_unrolled(
-                F.col("q_sub"), F.col("c_sub"), _PQ_SUBDIM
-            ).alias("d2"),
+            l2sq_unrolled("q_sub", "c_sub", _PQ_SUBDIM).alias("d2"),
         )
     )
     scored = (
@@ -3393,9 +3397,9 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "neighbor_id",
             "approx_dist2",
-            l2sq_unrolled(
-                F.col("q_emb"), F.col("n_emb"), _PQ_M * _PQ_SUBDIM
-            ).alias("exact_dist2"),
+            l2sq_unrolled("q_emb", "n_emb", _PQ_M * _PQ_SUBDIM).alias(
+                "exact_dist2"
+            ),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -3817,8 +3821,9 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The IVF coarse stage and the PQ codebook stage read only `emb`
     # and are data-independent until `codes` joins their outputs — but
-    # each trains through EAGER localCheckpoints, so built inline they
-    # serialize (measured 4.7 s + 2.4 s back-to-back at sf0.1). Two
+    # each trains through EAGER localCheckpoints (IVF's centroids and
+    # assignment, PQ's codebook), so built inline they serialize
+    # (measured 4.7 s + 2.4 s back-to-back at sf0.1). Two
     # driver threads submit both training chains concurrently and the
     # scheduler back-fills the tail of one chain with the other's
     # stages (guide-standard overlap of independent jobs); each chain
@@ -3856,59 +3861,12 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return cent, _ivf_assign(emb, cent).localCheckpoint(eager=True)
 
-    def _build_pq():
-        # codebooks; four consumers of `sub` (seed_books, seed assign,
-        # books, codes) — materialize once or each branch re-scans +
-        # re-explodes the source
-        sub = _pq_subvectors(emb).localCheckpoint(eager=True)
-        # seed codebook sliced straight from the k surviving FULL
-        # vectors (identical F.slice values) instead of broadcast-
-        # joining the ids back against the corpus-sized subvector
-        # table — r11, same fusion as ann_pq_topk
-        pq_seed_vecs = (
-            emb.select("vec_id", "embedding")
-            .orderBy(F.xxhash64(F.col("vec_id")), "vec_id")
-            .limit(_PQ_CODES)
-            .withColumn(
-                "code_id",
-                (F.row_number().over(
-                    Window.orderBy(F.xxhash64(F.col("vec_id")), "vec_id")
-                ) - 1).cast("int"),
-            )
-        )
-        seed_books = _pq_subvectors(
-            pq_seed_vecs, id_cols=("code_id",)
-        ).select("sub_idx", "code_id", F.col("subvec").alias("c_sub"))
-        books = (
-            sub.join(_pq_assign(sub, seed_books), ["vec_id", "sub_idx"])
-            .select(
-                "sub_idx", "code_id",
-                F.posexplode("subvec").alias("pos", "v"),
-            )
-            .groupBy("sub_idx", "code_id", "pos")
-            .agg(F.avg("v").alias("m"))
-            .groupBy("sub_idx", "code_id")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))).alias(
-                    "s"
-                )
-            )
-            .select(
-                "sub_idx", "code_id",
-                F.transform("s", lambda x: x.m.cast("float")).alias(
-                    "c_sub"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-        return sub, books
-
     with ThreadPoolExecutor(max_workers=2) as pool:
         ivf_f = pool.submit(_build_ivf)
-        pq_f = pool.submit(_build_pq)
+        pq_f = pool.submit(_pq_train, emb)
         cent, assign = ivf_f.result()
-        sub, books = pq_f.result()
-    codes = _pq_assign(sub, books).join(assign, "vec_id")
+        books, codes = pq_f.result()
+    codes = codes.join(assign, "vec_id")
 
     # ---- search: probe 2 cells, ADC against candidates, re-rank 50
     queries = emb.filter(F.col("vec_id") < 10).select(
@@ -3919,9 +3877,9 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "cell_id",
-            l2sq_unrolled(
-                F.col("q_emb"), F.col("c_emb"), _PQ_M * _PQ_SUBDIM
-            ).alias("c_d2"),
+            l2sq_unrolled("q_emb", "c_emb", _PQ_M * _PQ_SUBDIM).alias(
+                "c_d2"
+            ),
         )
         .withColumn(
             "rn",
@@ -3940,7 +3898,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dtable = q_sub.join(F.broadcast(books), "sub_idx").select(
         "query_id", "sub_idx", "code_id",
-        l2sq_unrolled(F.col("q_sub"), F.col("c_sub"), _PQ_SUBDIM).alias("d2"),
+        l2sq_unrolled("q_sub", "c_sub", _PQ_SUBDIM).alias("d2"),
     )
     cand_codes = codes.join(F.broadcast(q_cells), "cell_id").filter(
         F.col("vec_id") != F.col("query_id")
@@ -3973,9 +3931,9 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(queries), "query_id")
         .select(
             "query_id", "neighbor_id", "approx_dist2",
-            l2sq_unrolled(
-                F.col("q_emb"), F.col("n_emb"), _PQ_M * _PQ_SUBDIM
-            ).alias("exact_dist2"),
+            l2sq_unrolled("q_emb", "n_emb", _PQ_M * _PQ_SUBDIM).alias(
+                "exact_dist2"
+            ),
         )
     )
     w = Window.partitionBy("query_id").orderBy("exact_dist2", "neighbor_id")
@@ -4580,32 +4538,11 @@ def streaming_covariance_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
     emb_path = f"{sf_dir}/embeddings.parquet"
     schema = spark.read.parquet(emb_path).schema
     src = scratch_dir("fx_cov_src_")
-    # stage three deterministic hash-chunks as separate stream files —
-    # in ONE corpus pass (write.partitionBy on the chunk key) instead
-    # of three filtered scans (r11). Chunk contents identical (same
-    # hash expression); row order within a chunk changes, which the
-    # moment-cell fold is insensitive to (commutative exact-integer
-    # monoid).
+    # three hash-chunks as stream files; how rows split into files and
+    # micro-batches cannot change the moment-cell fold (commutative
+    # exact-integer monoid)
     emb = load(spark, sf_dir, "embeddings")
-    stage = scratch_dir("fx_cov_stage_")
-    (
-        emb.withColumn(
-            "chunk", (F.col("vec_id") * F.lit(2654435761)) % 3
-        )
-        .repartition(3, "chunk")
-        .write.mode("overwrite")
-        .partitionBy("chunk")
-        .parquet(stage)
-    )
-    for k in range(3):
-        chunk_dir = os.path.join(stage, f"chunk={k}")
-        part = next(
-            f for f in os.listdir(chunk_dir) if f.endswith(".parquet")
-        )
-        os.rename(
-            os.path.join(chunk_dir, part),
-            os.path.join(src, f"chunk_{k}.parquet"),
-        )
+    stage_hash_chunks(emb, "vec_id", 3, src)
 
     state = scratch_dir("fx_cov_state_") + "/cells"
 

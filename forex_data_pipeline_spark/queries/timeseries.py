@@ -712,17 +712,21 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rn <= 5
     """,
     doc="Time-series similarity search (EDBT'19/SIGMOD'20 family): each "
-    "(series, day) becomes a DENSE 24-point hourly profile (hours with "
-    "no events densified to 0 via a constant 24-row hour spine — an "
-    "earlier revision required 24 OBSERVED hours per profile, which no "
-    "sf0.001 profile satisfies, leaving the oracle vacuously green); "
-    "pairwise Euclidean distance is an hour-keyed equi-join + grouped "
-    "sum of squared diffs in EXACT integer micro-units folded as "
-    "DECIMAL(38,0) (squared hourly sums overflow int64 at sf0.1; "
-    "DuckDB's BIGINT sum promotes to HUGEINT identically — "
-    "order-independent, no float summation drift); top-5 closest "
-    "pairs with a total tie-break. Profiles are day-aggregated first "
-    "(the event scan collapses ~3 orders of magnitude before any "
+    "(series, day) becomes a DENSE 24-point hourly profile — one "
+    "(series, day)-keyed aggregation of 24 conditional micro-unit sums "
+    "into a fixed-length array<bigint>, hours with no events set to 0 "
+    "(an earlier revision required 24 OBSERVED hours per profile, which "
+    "no sf0.001 profile satisfies, leaving the oracle vacuously green). "
+    "Because every profile has the same 24 slots, pairs need no "
+    "hour-keyed join: the profile table (series x days rows) is "
+    "broadcast into a non-equi join on the (series, day) ordering "
+    "predicate, and the squared Euclidean distance is a zip_with + "
+    "aggregate fold over the two arrays in EXACT integer micro-units "
+    "as DECIMAL(38,0) (squared hourly sums overflow int64 at sf0.1; "
+    "DuckDB's BIGINT sum promotes to HUGEINT identically — exact, so "
+    "fold order cannot matter); top-5 closest pairs with a total "
+    "tie-break via TakeOrderedAndProject. Profiles are day-aggregated "
+    "first (the event scan collapses ~3 orders of magnitude before any "
     "pairing). At large series counts the all-pairs stage swaps for "
     "the LSH/IVF blocking of ann_lsh_topk/ann_ivf_topk — same "
     "distance kernel.",
@@ -730,68 +734,51 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ts_similarity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
-    sparse = ev.groupBy(
-        "event_type",
-        F.col("ts").cast("date").cast("string").alias("day"),
-        F.hour("ts").alias("hr"),
-    ).agg(
-        F.sum(F.round(F.col("value") * 1000000).cast("bigint")).alias(
-            "v_micro"
-        )
+    # one SQL text for the 24 slots (one parse, not ~100 Column calls);
+    # absent hours sum to NULL and densify to 0
+    slots = ", ".join(
+        f"coalesce(sum(CASE WHEN hour(ts) = {h} "
+        "THEN CAST(round(value * 1000000) AS BIGINT) END), 0)"
+        for h in range(24)
     )
-    # densify: every (series, day) profile gets all 24 hour slots,
-    # absent hours as 0 — the spine crossJoin is a constant 24-row
-    # broadcast, so the profile table stays series-day x 24 sized
-    spine = spark.range(24).select(F.col("id").cast("int").alias("hr"))
-    hourly = (
-        sparse.select("event_type", "day")
-        .distinct()
-        .crossJoin(F.broadcast(spine))
-        .join(sparse, ["event_type", "day", "hr"], "left")
-        .select(
-            "event_type", "day", "hr",
-            F.coalesce(F.col("v_micro"), F.lit(0)).alias("v_micro"),
-        )
-    )
-    a = hourly.select(
+    prof = ev.groupBy(
+        "event_type", F.col("ts").cast("date").cast("string").alias("day")
+    ).agg(F.expr(f"array({slots})").alias("profile"))
+    a = prof.select(
         F.col("event_type").alias("a_type"), F.col("day").alias("a_day"),
-        "hr", F.col("v_micro").alias("a_v"),
+        F.col("profile").alias("a_p"),
     )
-    b = hourly.select(
+    b = prof.select(
         F.col("event_type").alias("b_type"), F.col("day").alias("b_day"),
-        "hr", F.col("v_micro").alias("b_v"),
+        F.col("profile").alias("b_p"),
     )
     # squared micro-unit diffs overflow int64 at sf0.1 (hourly sums
     # reach ~1e12 micro; (1e12)^2 >> 2^63) — fold in DECIMAL(38,0)
     # (exact, order-independent; DuckDB's BIGINT sum promotes to
     # HUGEINT the same way) and emit as double
-    d = (F.col("a_v") - F.col("b_v")).cast("decimal(38,0)")
-    dist = (
-        a.join(b, "hr")
-        .filter(
-            (F.col("a_type") < F.col("b_type"))
-            | (
-                (F.col("a_type") == F.col("b_type"))
-                & (F.col("a_day") < F.col("b_day"))
-            )
-        )
-        .groupBy("a_type", "a_day", "b_type", "b_day")
-        .agg(
-            F.sum(d * d).alias("_dist2"),
-            F.count(F.lit(1)).alias("n_hours"),
-        )
-        .filter(F.col("n_hours") == 24)
+    dist2 = F.expr(
+        "aggregate(zip_with(a_p, b_p, (x, y) -> "
+        "CAST(x - y AS DECIMAL(38,0)) * CAST(x - y AS DECIMAL(38,0))), "
+        "CAST(0 AS DECIMAL(38,0)), (acc, d) -> acc + d)"
     )
-    w = Window.orderBy(
-        "_dist2", "a_type", "a_day", "b_type", "b_day"
+    pairs = a.join(
+        F.broadcast(b),
+        (F.col("a_type") < F.col("b_type"))
+        | (
+            (F.col("a_type") == F.col("b_type"))
+            & (F.col("a_day") < F.col("b_day"))
+        ),
     )
     return (
-        dist.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
+        pairs.select(
+            "a_type", "a_day", "b_type", "b_day", "a_p", dist2.alias("_dist2")
+        )
+        .orderBy("_dist2", "a_type", "a_day", "b_type", "b_day")
+        .limit(5)
         .select(
             "a_type", "a_day", "b_type", "b_day",
             F.col("_dist2").cast("double").alias("dist2_micro"),
-            "n_hours",
+            F.size("a_p").cast("bigint").alias("n_hours"),
         )
     )
 

@@ -16,8 +16,12 @@ eagerly; the atexit sweep is the backstop, not the primary cleanup.
 from __future__ import annotations
 
 import atexit
+import os
 import shutil
 import tempfile
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 _ROOT: str | None = None
 
@@ -34,3 +38,36 @@ def scratch_root() -> str:
 def scratch_dir(prefix: str = "") -> str:
     """A fresh directory under the swept scratch root."""
     return tempfile.mkdtemp(prefix=prefix, dir=scratch_root())
+
+
+def stage_hash_chunks(df: DataFrame, id_col: str, n: int, src: str) -> None:
+    """Stage ``df`` into the directory ``src`` as stream-source parquet
+    files, one group per hash chunk ``(id_col * 2654435761) % n``, in
+    ONE pass over ``df`` (``write.partitionBy`` on the chunk key, not n
+    filtered scans). Every file the writer leaves under a chunk
+    directory moves to ``src/chunk_<k>_<i>.parquet``; a chunk no row
+    hashes to has no directory and stages nothing, so the stream runs
+    one micro-batch fewer instead of failing or dropping rows."""
+    stage = scratch_dir("fx_stage_")
+    (
+        df.withColumn("chunk", (F.col(id_col) * F.lit(2654435761)) % n)
+        .repartition(n, "chunk")
+        .write.mode("overwrite")
+        .partitionBy("chunk")
+        .parquet(stage)
+    )
+    for chunk_dir in sorted(os.listdir(stage)):
+        if not chunk_dir.startswith("chunk="):
+            continue
+        k = chunk_dir.split("=", 1)[1]
+        parts = sorted(
+            f
+            for f in os.listdir(os.path.join(stage, chunk_dir))
+            if f.endswith(".parquet")
+        )
+        for i, part in enumerate(parts):
+            os.rename(
+                os.path.join(stage, chunk_dir, part),
+                os.path.join(src, f"chunk_{k}_{i}.parquet"),
+            )
+    shutil.rmtree(stage, ignore_errors=True)

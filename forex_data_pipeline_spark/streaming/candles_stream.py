@@ -77,7 +77,13 @@ def state_partitions_for(spark: SparkSession, *paths: str) -> int:
 def stream_shuffle_partitions(spark: SparkSession, n: int | None):
     """Set spark.sql.shuffle.partitions around a streaming start/drain
     (the value a stateful query freezes into its checkpoint), restoring
-    the session default afterwards so batch queries are untouched."""
+    the session default afterwards so batch queries are untouched.
+
+    The conf is session-wide, not per query: the set-and-restore
+    assumes ONE streaming start per session at a time. Two overlapping
+    starts on one session (or a batch query planned on another thread
+    meanwhile) see each other's width, and the later restore can put
+    back the earlier override instead of the default."""
     if n is None:
         yield
         return
@@ -153,6 +159,8 @@ def run_available_now_to_table(
     ``state_partitions_for``) sizes the state-store partition count to
     the staged input — AQE cannot coalesce state-store partitions."""
     spark = result.sparkSession
+    # session-wide conf: one streaming start per session at a time
+    # (see stream_shuffle_partitions)
     with stream_shuffle_partitions(spark, shuffle_partitions):
         q = (
             result.writeStream.format("memory")

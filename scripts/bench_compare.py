@@ -46,15 +46,13 @@ ABS_NOISE_SEC = 0.5  # deltas below this are scheduler noise, never flagged
 # drift, so a noisy rerun isn't mistaken for a plan regression.
 INTRINSIC_COST_NOTES = {
     "ann_pq_topk": (
-        "r4->r5 drift investigated: 4 solo reruns span 3.11-3.68 s "
-        "(+/-0.6 s noise); the floor is the eager Lloyd-pass job that "
-        "builds the codebook (~1.1 s) plus ~10 chained jobs of fixed "
-        "scheduler overhead. Two structural alternatives measured "
-        "SLOWER: collect+createDataFrame re-plant of the 256-row "
-        "codebook (3.9-4.6 s — Python-row serialization beats the "
-        "block-manager round-trip it saves) and coalesce(1) before "
-        "the checkpoint (3.5-5.2 s). The r3 2.81 s record is the "
-        "favorable tail of the same distribution; plan unchanged."
+        "the floor is its job chain, not data volume: 5 jobs train the "
+        "codebook (one eager checkpoint of the m*k-row books) and 9 run "
+        "encode, ADC, shortlist and re-rank, 14 in all at sf0.1 (about "
+        "1.2 s build and 2.5 s total on a 4-core host). Building the "
+        "DataFrame costs ~1.3k py4j commands, pinned by "
+        "tests/test_driver_cost.py; a build-time jump means an "
+        "expression builder regrew, not noise."
     ),
 }
 

@@ -140,3 +140,20 @@ def test_distributed_ema_empty_input(spark):
     out = distributed_ema(empty, "event_type", "ts", "value", 0.2)
     assert out.count() == 0
     assert set(out.columns) == {"event_type", "ts", "value", "ema"}
+
+
+def test_stage_hash_chunks_with_an_empty_chunk(spark, tmp_path):
+    """A hash chunk no row lands in stages nothing (no crash on its
+    missing directory); every row of the other chunks is staged."""
+    from forex_data_pipeline_spark.scratch import stage_hash_chunks
+
+    # 2654435761 % 3 == 1, so the chunk is id % 3: chunk 2 stays empty
+    ids = [0, 1, 3, 4, 6, 7]
+    df = spark.createDataFrame(
+        [(i, f"d{i}") for i in ids], "doc_id long, body string"
+    )
+    stage_hash_chunks(df, "doc_id", 3, str(tmp_path))
+    staged = sorted(p.name for p in tmp_path.iterdir())
+    assert {f.split("_")[1] for f in staged} == {"0", "1"}, staged
+    back = spark.read.parquet(str(tmp_path)).orderBy("doc_id").collect()
+    assert [(r.doc_id, r.body) for r in back] == [(i, f"d{i}") for i in ids]

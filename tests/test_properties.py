@@ -226,17 +226,15 @@ def test_hll_sketch_rollup_merges_and_bounds_error(spark, sf_dir):
         assert abs(rolled[et] - n) <= max(1, 0.05 * n)
 
 
+def _vec_pairs(dim: int):
+    vec = st.lists(st.floats(-10, 10, allow_nan=False, width=32),
+                   min_size=dim, max_size=dim)
+    return st.lists(st.tuples(vec, vec), min_size=1, max_size=8)
+
+
 @given(
-    vecs=st.lists(
-        st.tuples(
-            st.lists(st.floats(-10, 10, allow_nan=False, width=32),
-                     min_size=4, max_size=4),
-            st.lists(st.floats(-10, 10, allow_nan=False, width=32),
-                     min_size=4, max_size=4),
-        ),
-        min_size=1,
-        max_size=8,
-    )
+    # the PQ subspace width and the full embedding width
+    vecs=st.sampled_from([4, 64]).flatmap(_vec_pairs)
 )
 @settings(max_examples=15, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
@@ -251,7 +249,7 @@ def test_l2sq_unrolled_is_bit_identical_to_fold(spark, vecs):
     )
     rows = df.select(
         l2sq(F.col("a"), F.col("b")).alias("fold"),
-        l2sq_unrolled(F.col("a"), F.col("b"), 4).alias("unrolled"),
+        l2sq_unrolled("a", "b", len(vecs[0][0])).alias("unrolled"),
     ).collect()
     for r in rows:
         assert r.fold == r.unrolled  # bitwise, no tolerance
